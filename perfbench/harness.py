@@ -6,13 +6,14 @@ queries of a pass one after another, each built by
 noop sink, on one ``local[nproc]`` session.
 
 A run is: fresh process -> set-up -> the correctness check (the first,
-cold pass) -> host canary -> one warm-up pass -> warm passes for
+cold pass) -> host canary -> two warm-up passes -> warm passes for
 ``--seconds`` -> host canary.  Only set-up and the warm passes are
-timed.  The warm-up pass is untimed because the first noop pass after
-the check, or after the canary, runs 20-40% slower than the next ones.  With ``--trace 1`` the warm passes
-alternate between untraced and traced ones; a traced pass records spans
-and reads Spark's status stores after it ends, and the per-layer numbers
-come from those passes.
+timed.  The warm-up passes are untimed because the first noop passes
+after the check, or after the canary, run 10-40% slower than later ones
+(``v15``'s pinned loop keeps getting faster into its third pass).  With
+``--trace 1`` the warm passes alternate between untraced and traced
+ones; a traced pass records spans and reads Spark's status stores after
+it ends, and the per-layer numbers come from those passes.
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ from perfbench.digest import load_expected, result_digest  # noqa: E402
 from perfbench.trace import Tracer  # noqa: E402
 from perfbench.workloads import WORKLOADS  # noqa: E402
 
+WARMUP_PASSES = 2
 DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "sf0.1")
 
 
@@ -70,6 +72,10 @@ def rounds(seconds: float, minimum: int):
         n += 1
 
 
+class Mismatch(Exception):
+    """A query's result differs from its oracle-checked digest."""
+
+
 class Run:
     """Submits passes of one workload and counts every execution."""
 
@@ -98,47 +104,54 @@ class Run:
         self.errors.append(f"{name}: {why}")
         print(f"perfbench: {name} failed: {why}", file=sys.stderr)
 
+    def run_pass(self, query) -> tuple[float, float]:
+        """Submit every query once, in the seed's order, through
+        ``query(name)``; count each attempt, and each exception as a
+        failure.  Persisted RDDs are dropped after the pass, outside its
+        window.  Returns the pass's (epoch start, wall time)."""
+        epoch, start = time.time(), time.perf_counter()
+        for name in self.order():
+            self.attempted += 1
+            try:
+                query(name)
+            except Mismatch as exc:
+                self.fail(name, str(exc))
+            except Exception:  # noqa: BLE001 - counted, reported, run goes on
+                self.fail(name, traceback.format_exc(limit=3))
+        wall = time.perf_counter() - start
+        self.release()
+        return epoch, wall
+
     def timed_pass(self) -> tuple[float, dict[str, float]]:
         """(pass wall time, per-query latency) of one untraced pass."""
         latency: dict[str, float] = {}
-        start = time.perf_counter()
-        for name in self.order():
-            self.attempted += 1
+
+        def timed(name: str) -> None:
             t = time.perf_counter()
-            try:
-                self.execute(self.build(name))
-            except Exception:  # noqa: BLE001 - counted, reported, run goes on
-                self.fail(name, traceback.format_exc(limit=3))
-                continue
+            self.execute(self.build(name))
             latency[name] = time.perf_counter() - t
-        wall = time.perf_counter() - start
-        self.release()
-        return wall, latency
+
+        return self.run_pass(timed)[1], latency
 
     def check_pass(self, expected: dict) -> dict[str, str]:
         """Compare every query's result digest with the oracle-checked one."""
-        outcome = {}
-        for name in self.order():
-            self.attempted += 1
-            try:
-                digest, rows = result_digest(self.build(name))
-            except Exception:  # noqa: BLE001
-                self.fail(name, traceback.format_exc(limit=3))
-                outcome[name] = "exception"
-                continue
+        outcome: dict[str, str] = {}
+
+        def check(name: str) -> None:
+            outcome[name] = "exception"
+            digest, rows = result_digest(self.build(name))
             want = expected[name]
             if digest != want["sha256"] or rows != want["rows"]:
-                self.fail(name, f"result digest {digest[:12]} ({rows} rows) != "
-                          f"expected {want['sha256'][:12]} ({want['rows']} rows)")
                 outcome[name] = "mismatch"
-            else:
-                outcome[name] = "ok"
-        self.release()
+                raise Mismatch(f"result digest {digest[:12]} ({rows} rows) != "
+                               f"expected {want['sha256'][:12]} ({want['rows']} rows)")
+            outcome[name] = "ok"
+
+        self.run_pass(check)
         return outcome
 
     def release(self) -> None:
-        """Drop every persisted RDD, blocking, between passes (outside
-        every timed window), as ``bench.py`` does between queries."""
+        """Drop every persisted RDD, as ``bench.py`` does between queries."""
         for rdd in self.spark.sparkContext._jsc.getPersistentRDDs().values():
             rdd.unpersist()
 
@@ -166,7 +179,8 @@ def main(argv=None) -> int:
     check = run.check_pass(load_expected())
     check_s = time.perf_counter() - t_check
     canaries = [canary(spark, args.cpus)]
-    run.timed_pass()
+    for _ in range(WARMUP_PASSES):
+        run.timed_pass()
 
     record: dict = {"workload": args.workload, "seed": args.seed, "trace": args.trace}
     walls: list[float] = []

@@ -11,6 +11,8 @@ benchmark's own arithmetic can be unit-tested without a session:
   query's wall time minus the union of its job intervals.
 - ``Span`` / ``self_times``: a span's self time is its duration minus the
   part of its interval that its child spans cover.
+- ``parse_phases``: the phases of a ``QueryPlanningTracker`` as its
+  Scala map renders them.
 - ``count_exchanges``: Exchange nodes in the final adaptive plan of a
   formatted physical-plan description.
 """
@@ -109,6 +111,16 @@ def self_times(spans: list[Span]) -> list[float]:
         s.duration - interval_union(children.get(i, ()), s.start, s.end)
         for i, s in enumerate(spans)
     ]
+
+
+_PHASE = re.compile(r"(\w+) -> PhaseSummary\((\d+), (\d+)\)")
+
+
+def parse_phases(text: str) -> dict[str, tuple[float, float]]:
+    """``{phase: (start, end)}`` in epoch seconds from a tracker's
+    ``phases().mkString(" | ")``, e.g. ``"planning ->
+    PhaseSummary(1792220916611, 1792220916716) | ..."`` (milliseconds)."""
+    return {m[1]: (int(m[2]) / 1e3, int(m[3]) / 1e3) for m in _PHASE.finditer(text)}
 
 
 _PLAN_NODE = re.compile(r"^[\s:|+\-*]*(\w+)")

@@ -1,6 +1,6 @@
 """Benchmark entry point: one run of one workload.
 
-    python3 perfbench/run.py --driver-memory 4g --workload curate --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --driver-memory 4g --workload detect_train --seed 1 --seconds 25 --trace 0
 
 Run from the root of a checkout.  The run happens in a fresh child
 process (``perfbench/harness.py``) with its own directory under
@@ -22,6 +22,7 @@ record) is written to ``.perfbench/records/``.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import shlex
@@ -41,6 +42,7 @@ from perfbench.workloads import WORKLOADS  # noqa: E402
 
 RUN_LIMIT_S = 150  # a run that has not finished by then is killed
 MARKER = "PERFBENCH_RUN"
+WORK = os.path.join(ROOT, ".perfbench")
 
 END_TO_END = {"setup_s": "s", "wall_s": "s"}
 
@@ -81,6 +83,42 @@ def stop_all(marker: str) -> None:
         raise RuntimeError("benchmark processes survived SIGKILL")
 
 
+@contextlib.contextmanager
+def run_environment(driver_memory: str):
+    """A fresh run directory under ``.perfbench/`` and the environment of
+    a child process that keeps its temp files there: yields
+    ``(run_dir, env, cpus)``.  On exit every process carrying the run's
+    marker is stopped and the directory is deleted."""
+    os.makedirs(WORK, exist_ok=True)
+    run_dir = tempfile.mkdtemp(prefix="run-", dir=WORK)
+    tmp_dir = os.path.join(run_dir, "tmp")
+    jvm_dir = os.path.join(run_dir, "spark")
+    os.makedirs(tmp_dir)
+    os.makedirs(jvm_dir)
+    cpus = len(os.sched_getaffinity(0))
+    env = dict(
+        os.environ,
+        TMPDIR=tmp_dir,
+        SPARK_LOCAL_DIRS=jvm_dir,
+        SPARK_DRIVER_MEMORY=driver_memory,
+        SPARK_GRAFT_CPUS=str(cpus),
+        PYTHONPATH=os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p),
+        PYSPARK_SUBMIT_ARGS=(
+            "--driver-java-options "
+            + shlex.quote(f"-Djava.io.tmpdir={jvm_dir} -XX:-UsePerfData")
+            + " --conf spark.ui.showConsoleProgress=false pyspark-shell"
+        ),
+        **{MARKER: run_dir},
+    )
+    try:
+        yield run_dir, env, cpus
+    finally:
+        try:
+            stop_all(run_dir)
+        finally:
+            shutil.rmtree(run_dir, ignore_errors=True)
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
@@ -95,37 +133,15 @@ def main(argv=None) -> int:
               "openseizuredatabase_spark/ is missing", file=sys.stderr)
         return 2
 
-    work = os.path.join(ROOT, ".perfbench")
-    os.makedirs(work, exist_ok=True)
-    run_dir = tempfile.mkdtemp(prefix="run-", dir=work)
-    tmp_dir = os.path.join(run_dir, "tmp")
-    jvm_dir = os.path.join(run_dir, "spark")
-    os.makedirs(tmp_dir)
-    os.makedirs(jvm_dir)
-    result_path = os.path.join(run_dir, "result.json")
-    cpus = len(os.sched_getaffinity(0))
-    env = dict(
-        os.environ,
-        TMPDIR=tmp_dir,
-        SPARK_LOCAL_DIRS=jvm_dir,
-        SPARK_DRIVER_MEMORY=args.driver_memory,
-        SPARK_GRAFT_CPUS=str(cpus),
-        PYTHONPATH=os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p),
-        PYSPARK_SUBMIT_ARGS=(
-            "--driver-java-options "
-            + shlex.quote(f"-Djava.io.tmpdir={jvm_dir} -XX:-UsePerfData")
-            + " --conf spark.ui.showConsoleProgress=false pyspark-shell"
-        ),
-        **{MARKER: run_dir},
-    )
-    cmd = [
-        sys.executable, "-m", "perfbench.harness",
-        "--workload", args.workload, "--seed", str(args.seed),
-        "--seconds", str(args.seconds), "--trace", str(args.trace),
-        "--cpus", str(cpus), "--result", result_path,
-    ]
     rc = record = None
-    try:
+    with run_environment(args.driver_memory) as (run_dir, env, cpus):
+        result_path = os.path.join(run_dir, "result.json")
+        cmd = [
+            sys.executable, "-m", "perfbench.harness",
+            "--workload", args.workload, "--seed", str(args.seed),
+            "--seconds", str(args.seconds), "--trace", str(args.trace),
+            "--cpus", str(cpus), "--result", result_path,
+        ]
         proc = subprocess.Popen(cmd, cwd=ROOT, env=env, stdout=sys.stderr)
         try:
             rc = proc.wait(timeout=RUN_LIMIT_S)
@@ -137,14 +153,12 @@ def main(argv=None) -> int:
         if rc == 0:
             with open(result_path) as fh:
                 record = json.load(fh)
-            record["run_tmp_bytes"] = dir_bytes(tmp_dir)
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
+            record["run_tmp_bytes"] = dir_bytes(os.path.join(run_dir, "tmp"))
     if record is None:
         print(f"perfbench: run failed (exit {rc})", file=sys.stderr)
         return 1
 
-    records = os.path.join(work, "records")
+    records = os.path.join(WORK, "records")
     os.makedirs(records, exist_ok=True)
     name = f"{args.workload}-seed{args.seed}-trace{args.trace}.json"
     with open(os.path.join(records, name), "w") as fh:

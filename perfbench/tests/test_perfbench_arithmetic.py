@@ -11,7 +11,14 @@ import pyarrow as pa
 import pytest
 
 from perfbench.digest import table_digest
-from perfbench.layers import Span, count_exchanges, interval_union, parse_sql_metric, self_times
+from perfbench.layers import (
+    Span,
+    count_exchanges,
+    interval_union,
+    parse_phases,
+    parse_sql_metric,
+    self_times,
+)
 
 
 @pytest.mark.parametrize(
@@ -103,6 +110,20 @@ def test_span_self_time():
 def test_span_self_time_ignores_grandchildren():
     spans = [Span("pass", 0.0, 10.0), Span("query", 2.0, 6.0, 0), Span("job", 0.0, 10.0, 1)]
     assert self_times(spans)[0] == 6.0
+
+
+def test_parse_phases():
+    text = (
+        "planning -> PhaseSummary(1792220916611, 1792220916716) | "
+        "optimization -> PhaseSummary(1792220916215, 1792220916573) | "
+        "analysis -> PhaseSummary(1792220916214, 1792220916214)"
+    )
+    phases = parse_phases(text)
+    assert set(phases) == {"planning", "optimization", "analysis"}
+    start, end = phases["planning"]
+    assert math.isclose(end - start, 0.105, abs_tol=1e-6)
+    assert phases["analysis"][0] == phases["analysis"][1] == 1792220916.214
+    assert parse_phases("") == {}
 
 
 _AQE_PLAN = """== Physical Plan ==

@@ -1,18 +1,23 @@
 """Traced passes: spans from the benchmark's side, counts from Spark's.
 
-A traced pass runs every query under its own job group
-(``perfbench:<query>``) and times three phases around the calls into the
-engine: build (``fn``), plan (``executedPlan``) and exec (the noop
-write).  After the pass it waits for the listener bus to drain and reads
-the jobs, stages and SQL executions the pass added to Spark's status
-stores.  A job belongs to the query whose group it carries; a job from a
-thread that did not inherit the group belongs to the query whose window
-its submission falls in (there is one client).
+A traced pass does the same work as an untraced one: it runs every query
+under its own job group (``perfbench:<query>``) and times two phases
+around the calls into the engine, build (``fn``) and exec (the noop
+write).  Planning is read from the engine, not redone: a
+``QueryExecutionListener`` registered for the pass keeps the
+optimization and planning phases of every SQL execution that ran, noop
+writes and build-time collects alike.  After the pass it waits for the
+listener bus to drain and reads the jobs, stages and SQL executions the
+pass added to Spark's status stores.  A job belongs to the query whose
+group it carries or, if its thread did not inherit the group, to the
+query whose window it starts in (there is one client); a planning phase
+belongs to the query whose window it starts in.
 
-Spans: pass -> query -> {build, plan, exec} -> job.  Self times follow
-``layers.self_times``.  ``driver.self_s`` of a query is its wall time
-minus the union of its job intervals, so self time plus job-active time
-equals wall time.
+Spans: pass -> query -> {build, exec} -> {job, optimization, planning},
+each job and phase under the query phase it started in.  Self times
+follow ``layers.self_times``.  ``driver.self_s`` of a query is its wall
+time minus the union of its job intervals, so self time plus job-active
+time equals wall time.
 
 While a traced pass runs, ``lineage.pin`` and ``functions.literal.
 literal_df`` are replaced, in their own module and in every module that
@@ -28,7 +33,9 @@ import statistics
 import sys
 import time
 
-from perfbench.layers import Span, interval_union, self_times
+from pyspark.java_gateway import ensure_callback_server_started
+
+from perfbench.layers import Span, interval_union, parse_phases, self_times
 from perfbench.stores import PYTHON_METRICS, StatusStores
 
 # per-layer metrics and their units; the first group is summed over the
@@ -125,12 +132,51 @@ def wrapped_engine(counters: Counters):
             setattr(mod, attr, value)
 
 
+class PlanningListener:
+    """A ``QueryExecutionListener``, served through py4j's callback
+    server, that keeps the optimization and planning phases of every SQL
+    execution that ends while it is registered: the planning the engine
+    did for the executions that actually ran, noop writes included."""
+
+    PHASES = ("optimization", "planning")
+
+    def __init__(self, spark):
+        ensure_callback_server_started(spark.sparkContext._gateway)
+        self._manager = spark._jsparkSession.listenerManager()
+        self.phases: set[tuple[str, float, float]] = set()
+
+    @contextlib.contextmanager
+    def registered(self):
+        self.phases = set()
+        self._manager.register(self)
+        try:
+            yield self
+        finally:
+            self._manager.unregister(self)
+
+    def _keep(self, qe) -> None:
+        # a QueryExecution that runs twice reports the same phases twice
+        for phase, (start, end) in parse_phases(qe.tracker().phases().mkString(" | ")).items():
+            if phase in self.PHASES:
+                self.phases.add((phase, start, end))
+
+    def onSuccess(self, func_name, qe, duration_ns):  # noqa: N802 - Java interface
+        self._keep(qe)
+
+    def onFailure(self, func_name, qe, exception):  # noqa: N802
+        self._keep(qe)
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
 class Tracer:
     def __init__(self, run, cpus: int, tmp_dir: str):
         self.run = run
         self.cpus = cpus
         self.tmp_dir = tmp_dir
         self.stores = StatusStores(run.spark)
+        self.listener = PlanningListener(run.spark)
         self.spans: list[Span] = []
         self.passes: list[dict] = []  # per-pass layer totals
         self.queries: list[dict] = []  # per-query records, all passes
@@ -141,36 +187,31 @@ class Tracer:
         job0, ex0 = self.stores.max_job_id(), self.stores.max_execution_id()
         tmp0 = dir_bytes(self.tmp_dir)
         counters = Counters()
-        windows = []  # (name, start, build_end, plan_end, end, pins, literal rows)
-        start = time.time()
-        with wrapped_engine(counters):
-            for name in run.order():
-                run.attempted += 1
-                sc.setJobGroup(f"perfbench:{name}", name)
-                pins, rows = counters.pin_calls, counters.literal_rows
+        windows = []  # (name, start, build_end, end, pins, literal rows)
+
+        def traced(name: str) -> None:
+            pins, rows = counters.pin_calls, counters.literal_rows
+            sc.setJobGroup(f"perfbench:{name}", name)
+            try:
                 t0 = time.time()
-                try:
-                    df = run.build(name)
-                    t1 = time.time()
-                    df._jdf.queryExecution().executedPlan()
-                    t2 = time.time()
-                    run.execute(df)
-                except Exception as exc:  # noqa: BLE001
-                    run.fail(name, repr(exc))
-                    continue
-                finally:
-                    sc._jsc.clearJobGroup()
-                t3 = time.time()
-                windows.append((name, t0, t1, t2, t3, counters.pin_calls - pins,
-                                counters.literal_rows - rows))
-        end = time.time()
-        run.release()
-        self.stores.drain()
+                df = run.build(name)
+                t1 = time.time()
+                run.execute(df)
+                t2 = time.time()
+            finally:
+                sc._jsc.clearJobGroup()
+            windows.append((name, t0, t1, t2, counters.pin_calls - pins,
+                            counters.literal_rows - rows))
+
+        with wrapped_engine(counters), self.listener.registered() as listener:
+            start, wall = run.run_pass(traced)
+            self.stores.drain()  # every execution's phases have arrived
         jobs = self.stores.jobs_after(job0)
         executions = self.stores.executions_after(ex0)
-        self._record(start, end, windows, jobs, executions, dir_bytes(self.tmp_dir) - tmp0)
+        self._record(start, start + wall, windows, jobs, executions, listener.phases,
+                     dir_bytes(self.tmp_dir) - tmp0)
 
-    def _record(self, start, end, windows, jobs, executions, tmp_bytes) -> None:
+    def _record(self, start, end, windows, jobs, executions, phases, tmp_bytes) -> None:
         pass_idx = len(self.spans)
         self.spans.append(Span("pass", start, end, None, {"n": len(self.passes)}))
         by_query: dict[str, list] = {w[0]: [] for w in windows}
@@ -179,14 +220,21 @@ class Tracer:
             if job.group and job.group.startswith("perfbench:"):
                 owner = job.group[len("perfbench:"):]
             else:
-                owner = next((w[0] for w in windows if w[1] <= job.start <= w[4]), None)
+                owner = next((w[0] for w in windows if w[1] <= job.start <= w[3]), None)
             if owner in by_query:
                 by_query[owner].append(job)
+        # the tracker's clock ticks in milliseconds: allow one tick
+        planning: dict[str, list] = {w[0]: [] for w in windows}
+        for phase in phases:
+            owner = next((w[0] for w in windows if w[1] - 1e-3 <= phase[1] <= w[3]), None)
+            if owner is not None:
+                planning[owner].append(phase)
         totals = dict.fromkeys(SUMMED, 0.0)
         totals.update({"exec.skew_max": 1.0, "job_active_s": 0.0, "wall_s": end - start})
         layer_time = dict.fromkeys(LAYERS, 0.0)
-        for name, t0, t1, t2, t3, pins, literal_rows in windows:
-            q = self._query(pass_idx, name, t0, t1, t2, t3, by_query[name], executions)
+        for name, t0, t1, t2, pins, literal_rows in windows:
+            q = self._query(pass_idx, name, t0, t1, t2, by_query[name], executions,
+                            planning[name])
             q["lineage.pin_calls"] = pins
             q["driver.literal_rows"] = literal_rows
             self.queries.append(q)
@@ -204,21 +252,23 @@ class Tracer:
         totals["layer_s"] = layer_time
         self.passes.append(totals)
 
-    def _query(self, pass_idx, name, t0, t1, t2, t3, jobs, executions) -> dict:
+    def _query(self, pass_idx, name, t0, t1, t2, jobs, executions, planning) -> dict:
         spans = self.spans
         q_idx = len(spans)
-        spans.append(Span(name, t0, t3, pass_idx))
-        phase_idx = {}
-        for phase, a, b in (("build", t0, t1), ("plan", t1, t2), ("exec", t2, t3)):
-            phase_idx[phase] = len(spans)
-            spans.append(Span(phase, a, b, q_idx))
+        spans.append(Span(name, t0, t2, pass_idx))
+        build_idx, exec_idx = q_idx + 1, q_idx + 2
+        spans.append(Span("build", t0, t1, q_idx))
+        spans.append(Span("exec", t1, t2, q_idx))
         build_jobs = 0
         for job in jobs:
-            phase = "build" if job.start < t1 else "plan" if job.start < t2 else "exec"
-            build_jobs += phase == "build"
-            spans.append(Span(f"job {job.job_id}", job.start, job.end, phase_idx[phase],
+            build_jobs += job.start < t1
+            spans.append(Span(f"job {job.job_id}", job.start, job.end,
+                              build_idx if job.start < t1 else exec_idx,
                               {"stages": job.stage_ids}))
-        job_active = interval_union([(j.start, j.end) for j in jobs], t0, t3)
+        for phase, a, b in sorted(planning, key=lambda p: p[1]):
+            spans.append(Span(phase, a, b, build_idx if a < t1 else exec_idx))
+        catalyst = [(a, b) for _phase, a, b in planning]
+        job_active = interval_union([(j.start, j.end) for j in jobs], t0, t2)
         seen, stages = set(), []
         for job in jobs:
             for sid in job.stage_ids:
@@ -229,10 +279,10 @@ class Tracer:
                         stages.append(stage)
         job_ids = {j.job_id for j in jobs}
         mine = [e for e in executions
-                if job_ids.intersection(e.job_ids) or (not e.job_ids and t0 <= e.start <= t3)]
+                if job_ids.intersection(e.job_ids) or (not e.job_ids and t0 <= e.start <= t2)]
         python = {key: sum(e.python.get(key, 0.0) for e in mine)
                   for key in PYTHON_METRICS.values()}
-        wall = t3 - t0
+        wall = t2 - t0
         run_s = sum(s.run_s for s in stages)
         rec = {
             "query": name,
@@ -240,7 +290,7 @@ class Tracer:
             "wall_s": wall,
             "plans.build_s": t1 - t0,
             "plans.build_jobs": build_jobs,
-            "catalyst.plan_s": t2 - t1,
+            "catalyst.plan_s": sum(b - a for a, b in catalyst),
             "catalyst.exchanges": sum(e.exchanges for e in mine),
             "exec.jobs": len(jobs),
             "exec.stages": len(stages),
@@ -264,15 +314,16 @@ class Tracer:
             "job_active_s": job_active,
         }
         rec["coverage"] = (rec["driver.self_s"] + job_active) / wall if wall > 0 else 1.0
-        # exclusive layer times: build and plan self time are plans and
-        # catalyst, the rest of the driver's self time is driver, and the
-        # job-active time splits by each layer's share of task time
+        # exclusive layer times: build self time is plans, optimization
+        # and planning are catalyst, the rest of the driver's self time is
+        # driver, and the job-active time splits by each layer's share of
+        # task time
         selfs = self_times([
             Span(s.name, s.start, s.end, None if s.parent < q_idx else s.parent - q_idx)
             for s in spans[q_idx:]
         ])
-        plans_s = selfs[phase_idx["build"] - q_idx]
-        catalyst_s = selfs[phase_idx["plan"] - q_idx]
+        plans_s = selfs[build_idx - q_idx]
+        catalyst_s = interval_union(catalyst, t0, t2)
         py_s = min(python["python.run_s"], run_s)
         shuffle_task_s = min(
             rec["shuffle.fetch_wait_s"] + sum(s.shuffle_write_s for s in stages), run_s - py_s

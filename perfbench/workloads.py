@@ -5,42 +5,29 @@ lifecycle.  A run submits every query of the mix once per pass, in an
 order drawn from the run's seed; the seed changes nothing else.  The
 mixes are cut from the full lifecycle lists (README.md) so that one run,
 with its session set-up, fits the benchmark's per-run time budget while
-each mix still loads the layer it was chosen for.  Each mix has an odd
-number of queries: the median latency of a pass then falls on one
-query's samples instead of between two latency clusters.
+each mix still loads the layer it was chosen for, and so that a run's
+median falls among several passes: ``iterate_write``'s pinned loop alone
+starts some 45 jobs and takes 3-4 s a pass.
 """
 
 from __future__ import annotations
 
 WORKLOADS: dict[str, tuple[str, ...]] = {
-    # curator read path: scan, filter, window dedup and shuffle, all on
-    # the JVM; no Python stage
-    "curate": (
-        "f1_include_exclude",
-        "f12_min_group_size",
-        "c5_json_extract",
-        "a4_max_severity",
-        "d1_unique_event_grouping",
-        "d2_gap_clustering",
-        "d3_drop_duplicates",
-    ),
-    # detector replay and ML prep: most plans cross the Arrow boundary
-    # (MapInPandas, FlatMapGroupsInPandas, ArrowEvalPython)
+    # detector replay, feature extraction and batch inference: each plan
+    # crosses the Arrow boundary (MapInPandas, FlatMapGroupsInPandas,
+    # ArrowEvalPython)
     "detect_train": (
         "n31_osd_replay",
         "c9_fft_features",
         "c14_welch_psd",
-        "c13_iir_recurrence",
         "m9_batch_inference",
         "m16_rf_inference",
-        "a6_confusion_metrics",
     ),
-    # an iterative pinned loop with a driver-side finisher, a
-    # driver-collect gate and the write path (a lake schema merge into a
-    # temp dir): build-time jobs dominate
+    # an iterative pinned loop with a driver-side finisher, and a lake
+    # schema merge written to a temp dir: build-time jobs and the write
+    # path
     "iterate_write": (
         "v15_dbscan_grid",
-        "n10_bradley_terry",
         "d12_schema_merge",
     ),
 }
