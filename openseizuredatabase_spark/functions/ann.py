@@ -25,6 +25,7 @@ from pyspark.ml.functions import array_to_vector
 
 from openseizuredatabase_spark.functions.literal import literal_df
 from openseizuredatabase_spark.functions.vectors import cosine
+from openseizuredatabase_spark.sources.tables import max_partition_bytes
 
 
 def build_ivf(
@@ -141,11 +142,7 @@ def _spread_cpu_dense(df, spark, split_bytes: int = 262_144):
         )
     except Exception:
         return df
-    max_pb = int(
-        str(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        ).rstrip("b")
-    )
+    max_pb = max_partition_bytes(spark)
     if nbytes >= target * max_pb:
         return df  # the scan itself is already cluster-wide
     want = int(min(target, nbytes // split_bytes))

@@ -10,7 +10,19 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf
 from pyspark.sql import SparkSession
+
+# directory that holds the package: Python workers import the worker
+# daemon and every pickled-by-reference UDF from it
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _executor_pythonpath() -> str:
+    """``spark.executorEnv.PYTHONPATH`` with the package's parent directory
+    in front of any value a running JVM's conf already holds."""
+    existing = (SparkConf().get("spark.executorEnv.PYTHONPATH") or "").split(os.pathsep)
+    return os.pathsep.join([_PACKAGE_PARENT] + [p for p in existing if p and p != _PACKAGE_PARENT])
 
 
 def get_spark(app_name: str = "openseizuredatabase_spark", cpus: int | None = None) -> SparkSession:
@@ -19,6 +31,10 @@ def get_spark(app_name: str = "openseizuredatabase_spark", cpus: int | None = No
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or all local cores. On a real
     cluster the master/memory settings come from spark-submit; everything
     set here is safe to keep.
+
+    Python workers start through ``worker_daemon``, which spares each
+    task a re-read of the zip archives on the worker's path (see
+    README "Python workers").
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -42,6 +58,8 @@ def get_spark(app_name: str = "openseizuredatabase_spark", cpus: int | None = No
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "openseizuredatabase_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _executor_pythonpath())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -206,6 +206,14 @@ def register_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
+def max_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.maxPartitionBytes`` in bytes, parsed by Spark's own
+    byte-string rules, so human values such as ``"128m"`` or ``"64MB"``
+    read as Spark reads them."""
+    value = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+    return int(spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(value))
+
+
 def spread_small_scan(
     df: DataFrame, spark: SparkSession, approx_bytes: int | None = None
 ) -> DataFrame:
@@ -233,9 +241,7 @@ def spread_small_scan(
                                for p in df.inputFiles())
         except Exception:
             return df.repartition(target)
-    max_pb = int(
-        str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")).rstrip("b")
-    )
+    max_pb = max_partition_bytes(spark)
     # a scan of N bytes plans roughly ceil(N / maxPartitionBytes) splits;
     # below `want` splits the map side would underuse the cores
     if approx_bytes >= want * max_pb:

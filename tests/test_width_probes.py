@@ -84,3 +84,40 @@ def test_stream_width_local_still_derives_from_rows(spark, sf_dir):
         # sf0.001 events is tiny: the derived width must collapse to 1
         assert inside == 1
     assert spark.conf.get("spark.sql.shuffle.partitions", "32") == before
+
+
+@pytest.fixture
+def max_pb_conf(spark):
+    """Set ``spark.sql.files.maxPartitionBytes`` for one test, then unset."""
+    key = "spark.sql.files.maxPartitionBytes"
+    yield lambda value: spark.conf.set(key, value)
+    spark.conf.unset(key)
+
+
+@pytest.mark.parametrize(
+    "value, expected",
+    [
+        ("128m", 128 * 1024 * 1024),
+        ("64MB", 64 * 1024 * 1024),
+        ("134217728", 134217728),
+        ("134217728b", 134217728),
+    ],
+)
+def test_max_partition_bytes_parses_byte_strings(spark, max_pb_conf, value, expected):
+    max_pb_conf(value)
+    assert tables.max_partition_bytes(spark) == expected
+
+
+def test_max_partition_bytes_default(spark):
+    assert tables.max_partition_bytes(spark) == 134217728
+
+
+def test_spread_probes_accept_human_conf(spark, sf_dir, max_pb_conf):
+    """A ``"128m"`` conf used to crash both width probes; it must now give
+    the same decision as the byte default it spells."""
+    from openseizuredatabase_spark.functions.ann import _spread_cpu_dense
+
+    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    default = (tables.spread_small_scan(df, spark) is df, _spread_cpu_dense(df, spark) is df)
+    max_pb_conf("128m")
+    assert (tables.spread_small_scan(df, spark) is df, _spread_cpu_dense(df, spark) is df) == default
